@@ -415,9 +415,11 @@ def _bounded_stdout_line(result: dict, full_file: str, budget: int) -> str:
     # on the line across rounds and their deltas are the unbiased view.
     # Same budget, same schema — additions to queries{} only.
     prior_cost = dict(_prior_round_full().get("queries", {}))
-    by_cost = sorted(
-        result["queries"].items(),
-        key=lambda kv: -(prior_cost.get(kv[0]) or kv[1]))
+
+    def _rank_cost(kv):
+        prior = prior_cost.get(kv[0])     # a prior 0.0 is history too
+        return -(kv[1] if prior is None else prior)
+    by_cost = sorted(result["queries"].items(), key=_rank_cost)
     for name, sec in by_cost:
         slim["queries"][name] = sec
         if len(json.dumps(slim)) > budget - reserve:

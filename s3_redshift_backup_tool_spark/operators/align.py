@@ -98,15 +98,6 @@ def align_to_schema(df: DataFrame, target: T.StructType,
     return df.select(*projection)
 
 
-def project_columns(df: DataFrame, columns: list[str],
-                    rename_map: dict[str, str] | None = None) -> DataFrame:
-    """P3 explicit column-list projection with rename map (reference COPY
-    column lists, gemini_redshift_loader.py:574-599 +
-    column_mapper.py:201-224)."""
-    rename_map = rename_map or {}
-    return df.select(*[F.col(f"`{c}`").alias(rename_map.get(c, c)) for c in columns])
-
-
 def normalize_timestamp_string(col: Column) -> Column:
     """F7: ISO 'T'/'Z'/us/tz -> 'YYYY-MM-DD HH:MM:SS' (reference
     row_based.py:228-246, base.py:778-796)."""

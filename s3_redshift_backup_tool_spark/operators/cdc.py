@@ -260,11 +260,6 @@ def _fmt_ts(v) -> str | None:
 # Probes (S9/S10) — density analysis for sizing decisions
 # --------------------------------------------------------------------------
 
-def row_count_probe(df: DataFrame, ts_col: str, start, end) -> int:
-    """S9 windowed COUNT(*) (reference base.py:983-1068)."""
-    return df.filter(time_window_predicate(ts_col, start, end)).count()
-
-
 def hourly_density(df: DataFrame, ts_col: str) -> DataFrame:
     """S10 data-density sampling (reference base.py:486-623). The
     reference issues 6 COUNT probes over {1,4,12,24,48,168}h windows; one

@@ -180,18 +180,6 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     return _pairs_from_banded(banded, id_col, max_bucket_size)
 
 
-def _band_hash_from_array(band: int, rows_per_band: int):
-    """Band hash computed per-row from the signature array — bitwise
-    identical to the groupBy/collect_list formulation (same sorted
-    "idx:value" strings, same join, same md5)."""
-    entries = F.array(*[
-        F.concat_ws(":", F.lit(str(band * rows_per_band + j)),
-                    F.element_at("sig", band * rows_per_band + j + 1)
-                     .cast("string"))
-        for j in range(rows_per_band)])
-    return F.md5(F.concat_ws(",", F.sort_array(entries)))
-
-
 def _pairs_from_banded(banded: DataFrame, id_col: str,
                        max_bucket_size: int | None = None,
                        distinct: bool = True) -> DataFrame:

@@ -1093,6 +1093,15 @@ def ann_topk_indexed(spark, data_path: str, index_path: str,
 _PQ_MAX_K = 4096
 
 
+def _check_pq_k(k: int) -> None:
+    if k > _PQ_MAX_K:
+        raise ValueError(
+            f"k={k} exceeds _PQ_MAX_K={_PQ_MAX_K}: PQ encode cost is "
+            "O(n*k*d) — scale code length m, not k, with the corpus "
+            "(k proportional to corpus size is the IVF recipe, and "
+            "makes PQ quadratic)")
+
+
 def pq_codebooks(df: DataFrame, m: int = 8, k: int = 16,
                  vec_col: str = "embedding",
                  id_col: str = "vec_id") -> list[list[list[float]]]:
@@ -1114,12 +1123,7 @@ def pq_codebooks(df: DataFrame, m: int = 8, k: int = 16,
     measured k∝n here is O(n^2): x24.6 wall for x10 data. ``_PQ_MAX_K``
     fences the quadratic: beyond it the codebook/LUT plan literal also
     stops being "tiny"."""
-    if k > _PQ_MAX_K:
-        raise ValueError(
-            f"k={k} exceeds _PQ_MAX_K={_PQ_MAX_K}: PQ encode cost is "
-            "O(n*k*d) — scale code length m, not k, with the corpus "
-            "(k proportional to corpus size is the IVF recipe, and "
-            "makes PQ quadratic)")
+    _check_pq_k(k)
     rows = (df.filter(F.col(id_col) < k)
               .select(id_col, vec_col).orderBy(id_col).collect())
     d = len(rows[0][1])
@@ -1317,6 +1321,7 @@ def pq_residual_codebooks(df: DataFrame,
     the production upgrade (pq_codebooks_kmeans works unchanged on a
     pre-computed residual column). Same fixed-k scaling recipe as
     :func:`pq_codebooks` (encode is O(n*k*d); scale m, not k)."""
+    _check_pq_k(k)    # before the collect the fence exists to prevent
     rows = (df.filter(F.col(id_col) < k)
               .select(id_col, vec_col).orderBy(id_col).collect())
     return pq_residual_codebooks_from_rows(rows, centroids, m, k)
@@ -1330,10 +1335,7 @@ def pq_residual_codebooks_from_rows(rows, centroids, m: int = 8,
     codebooks without a second driver action (r14, guide §5). ``rows``
     must be the id-ascending first-``k`` rows the collecting form
     would fetch."""
-    if k > _PQ_MAX_K:
-        raise ValueError(
-            f"k={k} exceeds _PQ_MAX_K={_PQ_MAX_K}: PQ encode cost is "
-            "O(n*k*d) — scale code length m, not k, with the corpus")
+    _check_pq_k(k)
     rows = [r for r in rows][:k]
     d = len(rows[0][1])
     if d % m:

@@ -1327,6 +1327,10 @@ def ann_ivfpq_topk_embeddings(spark, sf_dir):
     rows16 = (emb.filter(F.col("vec_id") < 16)
                  .select("vec_id", "embedding").orderBy("vec_id")
                  .collect())
+    # centroids are ids 0..7, the query is id 0, the codebooks need all
+    # 16: a gap would otherwise surface as an empty query far downstream
+    assert [int(r[0]) for r in rows16] == list(range(16)), \
+        "embeddings must hold vec_id 0..15"
     cents = [(int(r[0]), [float(x) for x in r[1]])
              for r in rows16 if int(r[0]) < 8]
     qvec = [float(v) for r in rows16 if int(r[0]) == 0

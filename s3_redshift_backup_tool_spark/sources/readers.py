@@ -65,14 +65,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str,
-                   tables: list[str] | None = None) -> None:
-    for t in tables or TPCH_TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def jdbc_partitioned_options(url: str, table: str, *,
                              partition_column: str,
                              lower_bound: int, upper_bound: int,

@@ -4,8 +4,8 @@ Round-1 verdict scale fix: at millions of staged files the watermark
 document (one JSON array) and the driver-side set both explode. The
 manifest is now a parquet table; membership is an anti-join and recording
 is a distributed append — these tests pin that the watermark doc stays
-O(1) size regardless of manifest cardinality and that no path list is
-materialized on the driver during a sync.
+O(1) size regardless of manifest cardinality and that exclusion stays an
+anti-join, so the manifest itself is never collected.
 """
 
 from __future__ import annotations

@@ -79,7 +79,7 @@ def fixture(spark):
 
 
 def test_round_rewrite_equals_old_formulation(fixture):
-    """r14: adjacency-array expansion + canonical-pair scoring must
+    """r14: adjacency-array expansion (ordered-candidate scoring) must
     reproduce the edge-self-join round exactly (same rows, same
     rounded cos_sim, same ranks)."""
     g, vdf = fixture
@@ -98,10 +98,10 @@ def test_round_rewrite_equals_old_formulation_rho(fixture):
 
 
 def test_directed_candidate_does_not_leak_reverse(spark):
-    """The canonical-pair scoring keys dots on (least, greatest) with
-    per-orientation flags; a directed-only candidate (a g-edge whose
-    reverse has no witnessing common neighbor) must NOT emit a
-    mirrored row into the reverse node's ranking."""
+    """Ordered-candidate scoring ranks each (src, dst) candidate under
+    its own src; a directed-only candidate (a g-edge whose reverse has
+    no witnessing common neighbor) must NOT emit a mirrored row into
+    the reverse node's ranking."""
     # two disconnected directed edges: no common neighbors anywhere,
     # so the candidate set is exactly g and is purely directed
     g = spark.createDataFrame([(1, 2), (3, 4)], "src long, dst long")

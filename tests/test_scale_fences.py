@@ -247,6 +247,20 @@ def test_pq_k_proportional_to_corpus_is_fenced(spark, sf_dir):
     assert 16 <= sim._PQ_MAX_K
 
 
+def test_pq_residual_k_fence_fires_before_the_collect(spark):
+    """The fence exists to spare a k-row collect, so it must fire before
+    that collect: the frame here fails if it is ever run."""
+    from s3_redshift_backup_tool_spark.operators import similarity as sim
+
+    poisoned = spark.range(4).select(
+        F.col("id").alias("vec_id"),
+        F.raise_error(F.lit("collected")).cast("array<double>")
+         .alias("embedding"))
+    with pytest.raises(ValueError, match="_PQ_MAX_K"):
+        sim.pq_residual_codebooks(poisoned, [(0, [0.0] * 8)], m=8,
+                                  k=sim._PQ_MAX_K + 1)
+
+
 def test_capped_dedup_chain_drops_oversized_buckets(spark):
     """r12 verdict item 6: the production dedup entry
     (neardup_dedup_capped_documents) runs the CAPPED LSH chain. Pin

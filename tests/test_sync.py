@@ -247,3 +247,91 @@ def test_staging_partitions_scales_with_estimate(spark):
     assert 4 < n <= 10_000
     # cap clamps: a tiny target forces need >> cap
     assert staging_partitions(big, 4, target_bytes=1, cap=7) == 7
+
+
+def _two_syncs(spark, orders, cfg, store, staging, target, split="1999-01-01"):
+    """A base sync of the rows before ``split``, then a delta sync of the
+    rest: the second call is an ordinary incremental sync."""
+    base = orders.filter(F.col("o_orderdate") < F.lit(split).cast("timestamp"))
+    r1 = sync_table(spark, base, cfg, store,
+                    staging_path=staging, target_path=target)
+    r2 = sync_table(spark, orders, cfg, store,
+                    staging_path=staging, target_path=target)
+    return r1, r2
+
+
+def test_staged_files_on_missing_path_does_not_read(spark, tmp_path,
+                                                    monkeypatch):
+    """Every first sync lists a staging path that does not exist yet. The
+    FileSystem answers that; a read attempt would fail inside the sync's
+    Observation listener and log a PATH_NOT_FOUND error."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from s3_redshift_backup_tool_spark.plans import sync as sync_mod
+
+    reads = []
+    real = DataFrameReader.parquet
+    monkeypatch.setattr(DataFrameReader, "parquet",
+                        lambda self, *p, **kw: reads.append(p) or real(self, *p, **kw))
+    assert sync_mod._staged_files(spark, str(tmp_path / "missing")) == []
+    assert reads == []
+
+
+def test_sync_with_file_uris(spark, orders, store, tmp_path):
+    """Staging and target given as file:// URIs: existence checks go
+    through the Hadoop FileSystem, so the A7 count sees the target."""
+    staging = (tmp_path / "staging").as_uri()
+    target = (tmp_path / "target").as_uri()
+    total = orders.count()
+    r1, r2 = _two_syncs(spark, orders, _orders_cfg(), store, staging, target)
+    assert r1.verified and r1.target_rows == r1.rows_extracted > 0
+    assert r2.rows_extracted == total - r1.rows_extracted > 0
+    assert r2.files_loaded == r2.files_staged > 0
+    assert r2.target_rows == total and r2.verified
+    assert spark.read.parquet(target).select("o_orderkey").distinct().count() == total
+
+
+def test_delta_sync_lists_staging_twice_and_scans_manifest_twice(
+        spark, orders, store, tmp_path, monkeypatch):
+    """One delta sync lists staging before and after its write, and asks
+    the manifest twice: the to-load anti-join and record's dedup."""
+    from s3_redshift_backup_tool_spark.operators.manifest import ParquetManifest
+    from s3_redshift_backup_tool_spark.plans import sync as sync_mod
+
+    staging = str(tmp_path / "staging")
+    target = str(tmp_path / "target")
+    cfg = _orders_cfg()
+    base = orders.filter(F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp"))
+    sync_table(spark, base, cfg, store, staging_path=staging, target_path=target)
+
+    listings, manifest_reads = [], []
+    real_list, real_paths = sync_mod._staged_files, ParquetManifest.paths_df
+    monkeypatch.setattr(sync_mod, "_staged_files",
+                        lambda sp, p: listings.append(p) or real_list(sp, p))
+    monkeypatch.setattr(ParquetManifest, "paths_df",
+                        lambda self: manifest_reads.append(1) or real_paths(self))
+    r = sync_table(spark, orders, cfg, store, staging_path=staging, target_path=target)
+    assert r.rows_extracted > 0 and r.files_loaded == r.files_staged > 0
+    assert r.verified
+    assert len(listings) <= 2, listings
+    assert len(manifest_reads) <= 2, manifest_reads
+
+
+def test_non_date_partition_columns_load_like_a_rooted_read(spark, orders,
+                                                            store, tmp_path):
+    """The load reads only the files it picked; basePath keeps a data
+    partition column (staged as a hive directory, not in the files) on
+    that read, so the target matches a read of the whole staging root."""
+    staging = str(tmp_path / "staging")
+    target = str(tmp_path / "target")
+    cfg = TableConfig(table_name="orders", cdc_strategy="hybrid",
+                      cdc_timestamp_column="o_orderdate",
+                      cdc_id_column="o_orderkey",
+                      partition_columns=["o_orderstatus"])
+    r1, r2 = _two_syncs(spark, orders, cfg, store, staging, target)
+    assert r1.verified and r2.verified and r2.rows_extracted > 0
+    assert any(d.startswith("o_orderstatus=") for d in os.listdir(staging))
+    got, rooted = spark.read.parquet(target), spark.read.parquet(staging)
+    assert got.schema == rooted.schema
+    assert "o_orderstatus" in got.columns
+    assert got.exceptAll(rooted).isEmpty() and rooted.exceptAll(got).isEmpty()
