@@ -585,9 +585,10 @@ def jaccard_prefix_filter_pairs(df: DataFrame, text_col: str = "text",
     its OWN tokens by the (df, token) key, so the "global order" costs
     one broadcast-free join of df counts.
 
-    Verification is per-pair and exact: the candidates join back both
-    docs' full sorted-distinct token arrays and intersect them
-    (array_intersect — arrays, never a second corpus shuffle).
+    Verification is per-pair and exact (:func:`verify_jaccard`): the
+    candidates join back both docs' full distinct token arrays and
+    intersect them (array_intersect — arrays, never a second corpus
+    shuffle).
     Shuffles: df counts, the prefix self-join, candidate distinct, two
     array joins. At threshold 0.8 the prefix is ~20% of each set."""
     # every downstream step needs only shingle EQUALITY — hash to
@@ -618,6 +619,21 @@ def jaccard_prefix_filter_pairs(df: DataFrame, text_col: str = "text",
     cand = (a.join(b, "tok")
              .filter(F.col("id_a") < F.col("id_b"))
              .select("id_a", "id_b").distinct())
+    return verify_jaccard(cand, df, text_col, id_col, n, threshold)
+
+
+def verify_jaccard(cand: DataFrame, df: DataFrame, text_col: str = "text",
+                   id_col: str = "doc_id", n: int = 3,
+                   threshold: float = 0.5) -> DataFrame:
+    """Exact word-n-gram Jaccard check of candidate pairs ``(id_a, id_b)``:
+    keep a pair only if ``|A∩B| / |A∪B| >= threshold`` over the two docs'
+    distinct md5'd shingle sets. The filter keeps whatever pair contract
+    the candidates carry (distinct, ``id_a < id_b``). Columns: ``id_a``,
+    ``id_b``, ``inter``, ``size_a``, ``size_b``, ``jaccard``.
+
+    The shingle arrays are built per row from the text (order irrelevant
+    to array_intersect), so the corpus never re-shuffles for the verify
+    side; only the candidates move, through two array joins."""
     w = F.split(F.col(text_col), " ")
     grams = F.array_distinct(F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(0))),

@@ -11,9 +11,10 @@ set operations:
   keeps it shuffle-free while the manifest is small.
 - union-dedup = ``union().distinct()`` (U1)
 
-Existence checks go through the Hadoop ``FileSystem`` (:func:`path_exists`),
-never ``os.path``: staging, target and manifest may be object-store or
-``file://`` URIs.
+Existence checks and listings go through the Hadoop ``FileSystem``
+(:func:`path_exists`, :func:`child_dirs`), never ``os.path``: staging,
+target, manifest and curated shards may be object-store or ``file://``
+URIs.
 """
 
 from __future__ import annotations
@@ -42,13 +43,26 @@ def union_dedup(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.unionByName(b).distinct()
 
 
+def _hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path``, the filesystem its scheme names."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def path_exists(spark: SparkSession, path: str) -> bool:
     """Existence check through the Hadoop ``FileSystem`` the path's scheme
     names — ``os.path.exists`` says "absent" for every ``s3a://`` or
     ``file://`` URI."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return bool(hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-                .exists(hpath))
+    fs, hpath = _hadoop_fs(spark, path)
+    return bool(fs.exists(hpath))
+
+
+def child_dirs(spark: SparkSession, path: str) -> list[str]:
+    """Names of the directories directly under ``path``, listed through
+    the same Hadoop ``FileSystem`` as :func:`path_exists`."""
+    fs, hpath = _hadoop_fs(spark, path)
+    return [st.getPath().getName() for st in fs.listStatus(hpath)
+            if st.isDirectory()]
 
 
 class ParquetManifest:
@@ -76,8 +90,7 @@ class ParquetManifest:
         # schema-inference failure (round-3 advisor finding).
         if not path_exists(self.spark, self.path):
             return False
-        hpath = self.spark._jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, hpath = _hadoop_fs(self.spark, self.path)
         it = fs.listFiles(hpath, True)
         while it.hasNext():
             if it.next().getPath().getName().endswith(".parquet"):

@@ -3,6 +3,7 @@ into the actual training-prep workflow, with stage invariants."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from s3_redshift_backup_tool_spark.operators import dedup as dd
@@ -36,9 +37,12 @@ def test_curate_corpus_end_to_end(spark, documents, tmp_path):
     out = spark.read.parquet(out_path)
     assert out.count() == c["packed"]
 
-    # invariant: no surviving near-dup pairs among the output docs
-    leftover_pairs = dd.lsh_pairs(out.select("doc_id", "text"),
-                                  num_hashes=16, bands=8).count()
+    # invariant: no surviving near-dup pairs among the output docs — no
+    # LSH candidate pair among them passes the exact Jaccard verify
+    shipped = out.select("doc_id", "text")
+    leftover_pairs = dd.verify_jaccard(
+        dd.lsh_pairs(shipped, num_hashes=16, bands=8), shipped,
+        threshold=0.5).count()
     assert leftover_pairs == 0
 
     # invariant: no output doc is contaminated vs the eval corpus
@@ -131,8 +135,9 @@ def test_curate_classifier_gate(spark, documents):
     canon = dd.exact_dedup(survivors, "text", "doc_id").select(
         F.col("canonical_id").alias("doc_id"))
     survivors = survivors.join(canon, "doc_id", "left_semi")
-    pairs = dd.lsh_pairs(survivors, "text", "doc_id",
-                         num_hashes=16, bands=8)
+    pairs = dd.verify_jaccard(
+        dd.lsh_pairs(survivors, "text", "doc_id", num_hashes=16, bands=8),
+        survivors, "text", "doc_id", threshold=0.5)
     comp = dd.neardup_components(pairs)
     dupes = comp.filter(F.col("doc_id") != F.col("component")) \
                 .select("doc_id")
@@ -168,3 +173,120 @@ def test_curate_dsir_stage_targets_domain(spark, documents):
     # enrichment: en share among survivors > en share among input
     res_off = curate_corpus(spark, documents, None, min_quality=0.0)
     assert "dsir_selected" not in res_off.counts
+
+
+def _shingles(text: str, n: int = 3) -> frozenset:
+    """Distinct word n-grams as ``dedup.word_shingles`` builds them (a doc
+    shorter than n words is one shingle)."""
+    toks = text.split(" ")
+    return frozenset(" ".join(toks[i:i + n])
+                     for i in range(max(len(toks) - n, 0) + 1))
+
+
+def test_curate_neardup_removes_only_verified_duplicates(
+        spark, documents, monkeypatch):
+    """Every doc the near-dup stage removes has another exact-dedup
+    survivor at word-3-gram Jaccard >= 0.5 (computed here in plain
+    Python): an LSH band collision alone never removes a doc."""
+    seen = {}
+    real = dd.neardup_components
+
+    def spy(*args, **kwargs):
+        seen["comp"] = real(*args, **kwargs)
+        return seen["comp"]
+
+    monkeypatch.setattr(dd, "neardup_components", spy)
+    res = curate_corpus(spark, documents, min_quality=0.0, pack_buckets=4)
+    removed = {r[0] for r in seen["comp"]
+               .filter(F.col("doc_id") != F.col("component"))
+               .select("doc_id").collect()}
+    assert len(removed) == res.counts["exact_dedup"] - res.counts["near_dedup"]
+
+    survivors: dict[str, int] = {}
+    for i, t in documents.select("doc_id", "text").collect():
+        survivors[t] = min(survivors.get(t, i), i)
+    sh = {i: _shingles(t) for t, i in survivors.items()}
+    assert removed <= sh.keys()
+    for i in removed:
+        assert any(len(sh[i] & s) / len(sh[i] | s) >= 0.5
+                   for j, s in sh.items() if j != i), (
+            f"doc {i} removed with no near duplicate")
+
+
+def test_curate_reads_each_stage_boundary_once(spark, documents, tmp_path):
+    """Each stage boundary is computed once and counted from the cache,
+    and the shard write reads the cached rows: one call on the documents
+    fixture runs ~30 Spark jobs. Re-running the lineage under every
+    stage count and again for the write took ~65."""
+    sc = spark.sparkContext
+    sc.setJobGroup("curate-jobs-fence", "curate jobs fence")
+    try:
+        curate_corpus(spark, documents, out_path=str(tmp_path / "corpus"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("curate-jobs-fence")
+    assert len(jobs) <= 45, f"{len(jobs)} Spark jobs for one curate call"
+
+
+def test_curate_leaves_no_cached_frames(spark, documents, monkeypatch):
+    """Each stage boundary is released once the next one is counted, so
+    at most two are cached at once; none is left after a call, or after
+    a call whose stage raises; a caller-cached input stays cached."""
+    from s3_redshift_backup_tool_spark.operators import text as tx
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    # start from an empty cache manager: other test modules leave frames
+    # cached on the shared session
+    spark.catalog.clearCache()
+
+    persisted: list = []
+    live_before: list[int] = []
+    frame_cls = type(documents)  # the classic DataFrame subclass
+    real_persist = frame_cls.persist
+
+    def recording_persist(self, *args, **kwargs):
+        # how many earlier boundaries are still cached as this one starts
+        live_before.append(sum(cache.lookupCachedData(d._jdf).isDefined()
+                               for d in persisted))
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(frame_cls, "persist", recording_persist)
+        curate_corpus(spark, documents, gopher_min_words=40,
+                      min_quality=0.0, pack_buckets=4)
+    # rule gate, exact, near, quality, packed
+    assert len(live_before) == 5
+    assert live_before[0] == 0 and max(live_before) == 1, live_before
+    assert cache.isEmpty()
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("quality stage failed")
+
+    with monkeypatch.context() as m, \
+            pytest.raises(RuntimeError, match="quality stage failed"):
+        m.setattr(tx, "repetition_signals", boom)
+        curate_corpus(spark, documents)
+    assert cache.isEmpty()
+
+    mine = documents.select("doc_id", "text", "source").cache()
+    try:
+        mine.count()
+        curate_corpus(spark, mine, min_quality=0.0, pack_buckets=4)
+        assert cache.lookupCachedData(mine._jdf).isDefined()
+    finally:
+        mine.unpersist()
+    assert cache.isEmpty()
+
+
+def test_curate_shards_to_file_uri(spark, documents, tmp_path):
+    """A ``file://`` output is listed through the Hadoop FileSystem, so
+    the shard count works for URI outputs."""
+    out = (tmp_path / "corpus").as_uri()
+    res = curate_corpus(spark, documents, out_path=out, min_quality=0.0,
+                        pack_buckets=4)
+    written = spark.read.parquet(out)
+    assert written.count() == res.counts["packed"]
+    assert res.counts["shards"] == \
+        written.select("bucket").distinct().count() > 0
