@@ -4,7 +4,7 @@ The reference (read-only at /root/reference) is a MySQL -> S3 (Parquet) ->
 Redshift incremental CDC/ELT pipeline written as row-at-a-time Python. This
 package re-expresses every data-touching capability as idiomatic Spark:
 
-- ``state``              watermark v2.0 store + processed-file manifest
+- ``state``              watermark v2.0 store: cursor, counters, locks
                          (reference: src/core/simple_watermark_manager.py)
 - ``schema``             MySQL->Spark type mapping, DDL emitter, schema diff
                          (reference: src/core/flexible_schema_manager.py)
@@ -12,7 +12,8 @@ package re-expresses every data-touching capability as idiomatic Spark:
                          (reference: src/core/cdc_strategy_engine.py)
 - ``operators.align``    schema-alignment projection + cast suite
                          (reference: src/core/s3_manager.py:705-845)
-- ``operators.manifest`` processed-file anti-join / union-dedup
+- ``operators.manifest`` the parquet loaded-file manifest (the reference's
+                         processed_files blacklist) and its anti-join
                          (reference: src/core/gemini_redshift_loader.py:499-527)
 - ``operators.quality``  one-pass data-quality aggregates
                          (reference: src/utils/validation.py)

@@ -118,54 +118,43 @@ def cmd_watermark(args: argparse.Namespace) -> int:
         _emit(store.set_manual(*key, last_timestamp=args.timestamp,
                                last_id=args.id))
     elif args.action == "reset":
-        doc = store.reset(*key, preserve_files=args.preserve_files)
+        doc = store.reset(*key)
         if not args.preserve_files:
             # a full fresh-sync reset also clears the parquet manifest so
             # re-staged files load again (preserve keeps it, matching the
             # reference's preserve_files blacklist semantics)
             import shutil
-            shutil.rmtree(os.path.join(args.work_dir, "staging", args.table,
-                                       "_manifest"), ignore_errors=True)
+
+            from .operators.manifest import manifest_path
+            shutil.rmtree(manifest_path(os.path.join(
+                args.work_dir, "staging", args.table)), ignore_errors=True)
         _emit(doc)
     elif args.action == "count":
+        # the loader advances files_loaded_total by the files each manifest
+        # record adds, so the count needs neither Spark nor a manifest scan
         doc = store.get(*key)
-        n_doc_files = len(doc.get("processed_files") or [])
-        n_manifest = int(doc["redshift_state"].get("files_loaded_total") or 0)
         _emit({"table": args.table,
                "mysql_total_rows": doc["mysql_state"]["total_rows"],
                "redshift_total_rows": doc["redshift_state"]["total_rows"],
-               "processed_files": n_doc_files or n_manifest})
+               "processed_files": int(doc["redshift_state"]
+                                      .get("files_loaded_total") or 0)})
     elif args.action == "summary":
-        out = store.get_summary(*key)
-        out["file_stats"] = store.get_file_stats(*key)
-        _emit(out)
+        _emit(store.get_summary(*key))
     return 0
 
 
 def cmd_s3clean(args: argparse.Namespace) -> int:
     import glob as _glob
 
+    from .operators.manifest import local_loaded_paths
     from .plans.cleanup import clean_staging
-    store = _store(args.work_dir)
+    # loaded paths live in each table's parquet manifest under staging
     loaded: set[str] = set()
     staging_root = os.path.join(args.work_dir, "staging")
-    state_root = os.path.join(args.work_dir, "state", "watermarks", "v2")
-    if os.path.isdir(state_root):
-        for fn in os.listdir(state_root):
-            if fn.endswith(".json"):
-                src, _, rest = fn[:-5].partition("_")
-                table, _, tgt = rest.rpartition("_")
-                loaded |= store.processed_files(src, table, tgt)
-    # manifest-table mode: loaded paths live in per-table parquet manifests
-    for mpath in _glob.glob(os.path.join(staging_root, "*", "_manifest")):
-        try:
-            import pyarrow.parquet as pq
-            loaded |= set(pq.read_table(mpath, columns=["path"])
-                          .column("path").to_pylist())
-        except Exception:
-            pass
+    for table_staging in _glob.glob(os.path.join(staging_root, "*")):
+        loaded |= local_loaded_paths(table_staging)
     rep = clean_staging(
-        staging_root, loaded_files=loaded,
+        staging_root, loaded,
         older_than_seconds=(args.older_than_days * 86400
                             if args.older_than_days is not None else None),
         confirm=args.confirm)
@@ -821,7 +810,7 @@ def build_parser() -> argparse.ArgumentParser:
     wp.add_argument("--timestamp", default=None,
                     help="manual last_timestamp override")
     wp.add_argument("--preserve-files", action="store_true",
-                    help="reset: keep the processed-files blacklist")
+                    help="reset: keep the table's loaded-file manifest")
     wp.set_defaults(fn=cmd_watermark)
 
     cp = sub.add_parser("s3clean", help="reclaim staged files (dry-run "

@@ -11,6 +11,10 @@ set operations:
   keeps it shuffle-free while the manifest is small.
 - union-dedup = ``union().distinct()`` (U1)
 
+The manifest is the one record of which staged files reached the target;
+the watermark doc keeps only counts. Its location under a staging path is
+spelled only here (:func:`manifest_path`).
+
 Existence checks and listings go through the Hadoop ``FileSystem``
 (:func:`path_exists`, :func:`child_dirs`), never ``os.path``: staging,
 target, manifest and curated shards may be object-store or ``file://``
@@ -19,8 +23,30 @@ URIs.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def manifest_path(staging_path: str) -> str:
+    """Where the manifest of the files staged under ``staging_path`` lives.
+    The ``_`` prefix keeps it out of data reads of the staging root."""
+    return os.path.join(staging_path, "_manifest")
+
+
+def local_loaded_paths(staging_path: str) -> set[str]:
+    """The manifest's paths, read with pyarrow from a local staging
+    directory — for ops commands that run without a Spark session. A
+    missing manifest, or one holding no parquet file yet, is an empty
+    record."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    try:
+        return set(pq.read_table(manifest_path(staging_path),
+                                 columns=["path"]).column("path").to_pylist())
+    except (OSError, pa.ArrowException):
+        return set()
 
 
 def files_df(spark: SparkSession, paths: list[str], col: str = "path") -> DataFrame:
@@ -118,9 +144,12 @@ class ParquetManifest:
     def exclude_loaded(self, discovered: DataFrame, on: str = "path") -> DataFrame:
         """P5 blacklist exclusion at manifest scale: plain left_anti; no
         broadcast hint — AQE picks broadcast while the manifest is small
-        and degrades to a shuffled anti-join when it is not."""
-        return discovered.join(self.paths_df().withColumnRenamed("path", on)
-                               .distinct(), on=on, how="left_anti")
+        and degrades to a shuffled anti-join when it is not. No distinct on
+        the manifest side: an anti-join's result does not depend on
+        duplicate rows on its right, and a distinct would only add a
+        shuffle."""
+        return discovered.join(self.paths_df().withColumnRenamed("path", on),
+                               on=on, how="left_anti")
 
     def count(self) -> int:
         return self.paths_df().count()

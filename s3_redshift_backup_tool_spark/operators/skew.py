@@ -40,24 +40,6 @@ def explode_small_side(df: DataFrame, num_salts: int) -> DataFrame:
               .withColumn(SALT, F.col(SALT).cast("int")))
 
 
-def salt_count_for(max_key_rows: int, target_rows_per_task: int,
-                   max_salts: int = 256) -> int:
-    """Size the salt fan-out from MEASURED skew (r14, guide §2.3) —
-    feed it :func:`skew_report`'s ``max_key_rows``: enough salts that
-    the hottest key's rows split into ~``target_rows_per_task`` chunks,
-    clamped to [1, max_salts] because every salt multiplies the small
-    side's shuffle and memory. A constant salt count is wrong in both
-    directions at scale: too few leaves the hot key serialized, too
-    many replicates the small side for nothing. The result of a salted
-    join is identical for ANY count (the salt is synthetic and
-    dropped), so this knob is pure performance."""
-    if max_key_rows < 1 or target_rows_per_task < 1:
-        raise ValueError("max_key_rows and target_rows_per_task must be "
-                         ">= 1")
-    need = -(-max_key_rows // target_rows_per_task)   # ceil
-    return max(1, min(int(need), max_salts))
-
-
 def salted_join(big: DataFrame, small: DataFrame, on: list[str] | str,
                 num_salts: int = 8, how: str = "inner",
                 scatter_col: str | None = None) -> DataFrame:
@@ -65,11 +47,9 @@ def salted_join(big: DataFrame, small: DataFrame, on: list[str] | str,
 
     Semantically identical to ``big.join(small, on, how)`` for inner and
     left joins (every big row keeps exactly one salt; every small row
-    exists at every salt). Size ``num_salts`` from measured skew —
-    ``salt_count_for(skew_report(big, key).first()["max_key_rows"],
-    target_rows_per_task)`` — not a guess: the salt count only affects
-    cost, never the result, and the right value is a property of the
-    hottest key's row count, not of the cluster or a default."""
+    exists at every salt). ``num_salts`` only affects cost, never the
+    result: enough salts to split the hottest key's rows into task-sized
+    chunks, no more, since each salt replicates the small side once."""
     if how not in ("inner", "left", "left_outer", "leftouter"):
         raise ValueError(f"salted_join supports inner/left joins, not {how!r}")
     keys = [on] if isinstance(on, str) else list(on)

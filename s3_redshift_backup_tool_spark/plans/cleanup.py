@@ -6,8 +6,8 @@ explicit confirm flag — ``src/core/s3_manager.py:555-615``, CLI
 of parquet files; the same safety contract holds:
 
 - dry-run by default (``confirm=False`` only reports),
-- a file is deletable only if it is already loaded (in the manifest
-  blacklist) or older than the retention cutoff,
+- a file is deletable only if it is already loaded (in the parquet
+  manifest, ``operators.manifest``) or older than the retention cutoff,
 - deletes run in bounded batches so a huge backlog can't build one giant
   request (mirrors the 1000-key S3 limit; on a real deployment swap the
   unlink for an S3 batch-delete call with the same batching).
@@ -37,8 +37,8 @@ class CleanReport:
 
 def clean_staging(
     staging_root: str,
-    *,
     loaded_files: set[str] | None = None,
+    *,
     older_than_seconds: float | None = None,
     confirm: bool = False,
     now: float | None = None,
@@ -46,8 +46,8 @@ def clean_staging(
     """Report (and with ``confirm=True`` delete) staged parquet files that
     are safe to reclaim.
 
-    Safe = present in ``loaded_files`` (the watermark manifest blacklist:
-    already COPY'd, so staging is just a cache) OR older than
+    Safe = present in ``loaded_files`` (the paths the parquet manifest
+    records: already COPY'd, so staging is just a cache) OR older than
     ``older_than_seconds``. Files matching neither are never touched —
     deleting an unloaded staged file would lose data the next load pass
     still needs."""

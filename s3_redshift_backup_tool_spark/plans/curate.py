@@ -141,8 +141,11 @@ def curate_corpus(
                                   threshold=0.5)
         comp = dd.neardup_components(pairs, pairs_distinct=True)
         # docs in no component are unique; component members survive only if
-        # they ARE the component label (min id = canonical)
-        dupes = comp.filter(F.col(id_col) != F.col("component")).select(id_col)
+        # they ARE the component label (min id = canonical). Components are
+        # always keyed doc_id, whatever the caller's id column is called
+        dupes = comp.filter(F.col("doc_id") != F.col("component")).select("doc_id")
+        if id_col != "doc_id":
+            dupes = dupes.withColumnRenamed("doc_id", id_col)
         docs = boundary("near_dedup", docs.join(dupes, id_col, "left_anti"))
 
         # -- 3. quality filter ------------------------------------------------

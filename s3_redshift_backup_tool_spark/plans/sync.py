@@ -43,7 +43,8 @@ from ..operators import cdc as cdc_ops
 from ..operators.align import align_to_schema
 from ..operators.cdc import Watermark
 from ..operators.column_mapper import apply_column_map
-from ..operators.manifest import ParquetManifest, files_df, path_exists
+from ..operators.manifest import (ParquetManifest, files_df, manifest_path,
+                                  path_exists)
 from ..operators.quality import QualityReport, run_quality_gate
 from ..state import WatermarkStore
 from .pipeline import PipelineConfig, TableConfig
@@ -314,7 +315,7 @@ def sync_table(
         # back as hive partition columns on a directory read — the load
         # stage drops exactly these to restore the extracted schema
         gen_cols = [c for c in gran if not _has_col(delta, c)]
-        manifest = ParquetManifest(spark, os.path.join(staging_path, "_manifest"))
+        manifest = ParquetManifest(spark, manifest_path(staging_path))
 
         # Empty-delta short-circuit: no staging write, no manifest growth.
         # limit-1 probe is pushdown-cheap even at 100 TB. BUT a prior run

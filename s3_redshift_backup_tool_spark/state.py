@@ -2,11 +2,17 @@
 
 Re-implements the v2.0 watermark document semantics of the reference's
 ``src/core/simple_watermark_manager.py`` (doc shape :465-499, scoped key
-:551-574, cumulative math :120-184, blacklist union-dedup :186-229 with
-O(1) cached membership :231-249, manual set/reset :364-406, advisory locks
-:408-463, retry-on-save :501-549) as a pure-Python module with a pluggable
-key-value backend (local directory of JSON files by default; an S3 client
-exposing get/put/delete/head would drop in unchanged).
+:551-574, cumulative math :120-184, manual set/reset :364-406, advisory
+locks :408-463, retry-on-save :501-549) as a pure-Python module with a
+pluggable key-value backend (local directory of JSON files by default; an
+S3 client exposing get/put/delete/head would drop in unchanged).
+
+The reference's ``processed_files`` blacklist (:186-249) is not kept here:
+the one record of which staged files reached the target is the parquet
+manifest (``operators.manifest.ParquetManifest``), which the load stage
+anti-joins. The doc keeps only cumulative file counters. Keys an older doc
+still carries (a ``processed_files`` array, ``last_loaded_files``) are
+ignored.
 
 No Spark dependency — unit-testable in isolation. The Spark sync plan
 (``plans.sync``) reads the watermark to build the CDC predicate and commits
@@ -21,7 +27,6 @@ import os
 import socket
 import time
 import uuid
-from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Any
 
@@ -50,9 +55,7 @@ def default_watermark() -> dict[str, Any]:
             "last_session_rows": 0,
             "status": "pending",
             "error": None,
-            "last_loaded_files": [],
         },
-        "processed_files": [],         # the blacklist / file manifest
         "metadata": {
             "created_at": _utcnow_iso(),
             "manual_override": False,
@@ -121,7 +124,9 @@ class LockHeldError(RuntimeError):
 
 
 class WatermarkStore:
-    """Scoped watermark documents + processed-file manifest + locks.
+    """Scoped watermark documents (cursor + cumulative row and file
+    counters) + advisory locks. The loaded-file record itself is the
+    parquet manifest, not this store.
 
     Key layout mirrors the reference: ``watermarks/v2/{source}_{table}_{target}.json``
     and locks under ``watermarks/v2/locks/``.
@@ -132,7 +137,6 @@ class WatermarkStore:
     def __init__(self, backend: LocalJsonBackend, max_retries: int = 3):
         self.backend = backend
         self.max_retries = max_retries
-        self._blacklist_cache: dict[str, set[str]] = {}
 
     # -- keys -------------------------------------------------------------
     def _key(self, source: str, table: str, target: str) -> str:
@@ -226,22 +230,17 @@ class WatermarkStore:
         table: str,
         target: str,
         *,
-        loaded_files: list[str] | None = None,
-        n_files: int | None = None,
+        n_files: int = 0,
         status: str = "success",
         error: str | None = None,
     ) -> dict:
-        """Record the load commit.
+        """Record the load commit: ``n_files`` files reached the target.
 
-        Two modes:
-        - ``loaded_files=[...]`` — reference-parity JSON blacklist:
-          union-dedup into ``processed_files`` (reference :186-229). Fine
-          for small deployments; the doc grows with file count.
-        - ``n_files=k`` — manifest-table mode (the 100 TB path): the
-          authoritative blacklist lives in the staging-side parquet
-          manifest (operators.manifest.ParquetManifest); the doc keeps
-          only cumulative counts as metadata, so it stays O(1) size at
-          millions of files.
+        Which files they were is recorded once, in the staging-side parquet
+        manifest (``operators.manifest.ParquetManifest``), the reference's
+        ``processed_files`` blacklist (reference :186-229). The doc keeps
+        only the cumulative count, so it stays O(1) size at millions of
+        files.
 
         Note the subtlety preserved from the reference: load-side row counts
         are NOT updated here — only via :meth:`update_target_count`
@@ -249,18 +248,9 @@ class WatermarkStore:
         """
         doc = self.get(source, table, target)
         rs = doc["redshift_state"]
-        if loaded_files is not None:
-            existing = set(doc.get("processed_files") or [])
-            doc["processed_files"] = sorted(existing | set(loaded_files))
-            rs["last_loaded_files"] = list(loaded_files)
-            rs["last_session_files"] = len(loaded_files)
-            self._blacklist_cache[self._key(source, table, target)] = \
-                set(doc["processed_files"])
-        else:
-            rs["last_loaded_files"] = []
-            rs["last_session_files"] = int(n_files or 0)
-            rs["files_loaded_total"] = \
-                int(rs.get("files_loaded_total") or 0) + int(n_files or 0)
+        rs["last_session_files"] = int(n_files)
+        rs["files_loaded_total"] = \
+            int(rs.get("files_loaded_total") or 0) + int(n_files)
         rs["last_session_rows"] = 0  # counts come only from external count
         rs["status"] = status
         rs["error"] = error
@@ -290,26 +280,12 @@ class WatermarkStore:
         self._save(source, table, target, doc)
         return doc
 
-    # -- manifest membership ----------------------------------------------
-    def processed_files(self, source: str, table: str, target: str) -> set[str]:
-        """Cached blacklist set — O(1) membership (reference :231-249)."""
-        key = self._key(source, table, target)
-        if key not in self._blacklist_cache:
-            doc = self.get(source, table, target)
-            self._blacklist_cache[key] = set(doc.get("processed_files") or [])
-        return self._blacklist_cache[key]
-
-    def is_processed(self, source: str, table: str, target: str, path: str) -> bool:
-        return path in self.processed_files(source, table, target)
-
-    # -- ops/reporting surface (reference :279-363) ------------------------
+    # -- ops/reporting surface (reference :323-363) ------------------------
     def get_summary(self, source: str, table: str, target: str) -> dict[str, Any]:
         """Comprehensive per-table stats (reference ``get_summary``
         :323-363): extraction + load totals, cursor, file counts."""
         doc = self.get(source, table, target)
         ms, rs = doc.get("mysql_state", {}), doc.get("redshift_state", {})
-        processed = doc.get("processed_files") or []
-        n_files = len(processed) or int(rs.get("files_loaded_total") or 0)
         return {
             "table_name": table,
             "mysql_total_rows": ms.get("total_rows", 0),
@@ -321,44 +297,9 @@ class WatermarkStore:
             "redshift_total_rows": rs.get("total_rows", 0),
             "redshift_last_session_rows": rs.get("last_session_rows", 0),
             "redshift_status": rs.get("status", "pending"),
-            "total_processed_files": n_files,
+            "total_processed_files": int(rs.get("files_loaded_total") or 0),
             "created_at": doc.get("metadata", {}).get("created_at"),
             "manual_override": doc.get("metadata", {}).get("manual_override", False),
-        }
-
-    def get_file_stats(self, source: str, table: str, target: str) -> dict[str, Any]:
-        """Blacklist-size monitoring (reference ``get_file_stats``
-        :279-299). In manifest-table mode the doc array is empty by design
-        and the performance warning can never fire — that is the point."""
-        import json as _json
-        doc = self.get(source, table, target)
-        processed = doc.get("processed_files") or []
-        json_kb = len(_json.dumps(processed)) / 1024
-        key = self._key(source, table, target)
-        return {
-            "total_files": len(processed) or
-                int(doc["redshift_state"].get("files_loaded_total") or 0),
-            "json_size_kb": round(json_kb, 2),
-            "cache_status": "cached" if key in self._blacklist_cache else "not_cached",
-            "sample_files": processed[:5],
-            "performance_warning": json_kb > 1024,
-        }
-
-    def get_files_by_status(self, source: str, table: str, target: str,
-                            files: list[str]) -> dict[str, Any]:
-        """Split a discovery listing into processed/unprocessed (reference
-        :301-321). JSON-blacklist mode only — manifest-table deployments
-        do this as an anti-join (ParquetManifest.exclude_loaded), never
-        materializing the split on the driver."""
-        blacklist = self.processed_files(source, table, target)
-        processed = [f for f in files if f in blacklist]
-        unprocessed = [f for f in files if f not in blacklist]
-        return {
-            "processed_files": processed,
-            "unprocessed_files": unprocessed,
-            "total_processed": len(processed),
-            "total_unprocessed": len(unprocessed),
-            "total_files": len(files),
         }
 
     # -- manual override / reset ------------------------------------------
@@ -383,16 +324,13 @@ class WatermarkStore:
         self._save(source, table, target, doc)
         return doc
 
-    def reset(self, source: str, table: str, target: str, *, preserve_files: bool = False) -> dict:
-        """Fresh-sync reset (reference :387-406). ``preserve_files=True``
-        keeps the processed-file blacklist so already-loaded files are not
-        loaded twice after a cursor reset."""
-        old = self.get(source, table, target)
+    def reset(self, source: str, table: str, target: str) -> dict:
+        """Fresh-sync reset (reference :387-406). The loaded-file record is
+        the parquet manifest, not the doc, so the reference's
+        ``preserve_files`` choice is made where the manifest lives (the
+        CLI's ``watermark reset [--preserve-files]``)."""
         doc = default_watermark()
-        if preserve_files:
-            doc["processed_files"] = list(old.get("processed_files") or [])
         self._save(source, table, target, doc)
-        self._blacklist_cache.pop(self._key(source, table, target), None)
         return doc
 
     # -- advisory locks ----------------------------------------------------
@@ -429,145 +367,3 @@ class WatermarkStore:
             self.backend.delete(lk)
             return True
         return False
-
-
-@dataclass
-class WatermarkView:
-    """Legacy-attribute adapter over a v2.0 doc (reference
-    src/core/watermark_adapter.py:20-101)."""
-
-    doc: dict[str, Any] = field(default_factory=default_watermark)
-
-    @property
-    def last_mysql_data_timestamp(self) -> str | None:
-        return self.doc["mysql_state"]["last_timestamp"]
-
-    @property
-    def last_processed_id(self) -> int:
-        return int(self.doc["mysql_state"]["last_id"] or 0)
-
-    @property
-    def mysql_row_count(self) -> int:
-        return int(self.doc["mysql_state"]["total_rows"] or 0)
-
-    @property
-    def redshift_row_count(self) -> int:
-        return int(self.doc["redshift_state"]["total_rows"] or 0)
-
-    @property
-    def mysql_status(self) -> str:
-        return self.doc["mysql_state"]["status"]
-
-    @property
-    def processed_s3_files(self) -> list[str]:
-        return list(self.doc.get("processed_files") or [])
-
-    @property
-    def mysql_last_session_rows(self) -> int:
-        return int(self.doc["mysql_state"].get("last_session_rows") or 0)
-
-    @property
-    def redshift_status(self) -> str:
-        return self.doc["redshift_state"]["status"]
-
-    @property
-    def redshift_last_session_rows(self) -> int:
-        return int(self.doc["redshift_state"].get("last_session_rows") or 0)
-
-    @property
-    def s3_file_count(self) -> int:
-        # files created during extraction, NOT files loaded (the reference
-        # fixed exactly this confusion, watermark_adapter.py:56-58)
-        return int(self.doc["mysql_state"].get("s3_files_created") or 0)
-
-    @property
-    def backup_strategy(self) -> str:
-        return self.doc.get("cdc_strategy", "hybrid")
-
-    @property
-    def last_error(self) -> str | None:
-        return (self.doc["mysql_state"].get("error")
-                or self.doc["redshift_state"].get("error"))
-
-
-class LegacyWatermarkAdapter:
-    """v1-compat API over :class:`WatermarkStore` — the migration shim for
-    callers written against the old per-table watermark interface
-    (reference src/core/watermark_adapter.py:66-250): same method names
-    and argument shapes, backed by the v2.0 document store.
-
-    Also imports v1-shaped documents (``last_mysql_data_timestamp`` /
-    ``last_processed_id`` / ``processed_s3_files`` attribute soup) into
-    the v2.0 store so a deployment can migrate state without re-syncing.
-    """
-
-    def __init__(self, store: WatermarkStore, source: str, target: str):
-        self.store = store
-        self.source = source
-        self.target = target
-
-    def get_table_watermark(self, table: str) -> WatermarkView:
-        return WatermarkView(self.store.get(self.source, table, self.target))
-
-    def update_mysql_watermark(self, table: str, extraction_time: str,
-                               max_data_timestamp: str | None,
-                               last_processed_id: int | None,
-                               rows_extracted: int, status: str = "success",
-                               s3_file_count: int = 0,
-                               error: str | None = None) -> bool:
-        """Legacy extraction commit (reference :159-181): session figures
-        fold into the v2.0 cumulative accounting."""
-        self.store.update_extraction_state(
-            self.source, table, self.target,
-            last_timestamp=max_data_timestamp, last_id=last_processed_id,
-            session_rows=rows_extracted, session_files=s3_file_count,
-            status=status, error=error)
-        return True
-
-    def update_redshift_watermark(self, table: str, load_time,
-                                  rows_loaded: int, status: str = "success",
-                                  processed_files: list[str] | None = None,
-                                  error: str | None = None) -> bool:
-        """Legacy load commit (reference :183-214). ``rows_loaded`` is
-        deliberately ignored, matching the reference: load-side counts
-        come only from the external target count
-        (:meth:`WatermarkStore.update_target_count`)."""
-        self.store.update_load_state(
-            self.source, table, self.target,
-            loaded_files=processed_files or [], status=status, error=error)
-        return True
-
-    def import_legacy_doc(self, table: str, legacy: dict) -> dict:
-        """Migrate a v1 watermark document into the v2.0 store. Cumulative
-        totals are carried over verbatim (not re-accumulated), the file
-        blacklist union-dedups with anything already recorded."""
-        doc = self.store.get(self.source, table, self.target)
-        ms = doc["mysql_state"]
-        ms["last_timestamp"] = legacy.get("last_mysql_data_timestamp",
-                                          ms["last_timestamp"])
-        if legacy.get("last_processed_id") is not None:
-            ms["last_id"] = int(legacy["last_processed_id"])
-        ms["status"] = legacy.get("mysql_status", ms["status"])
-        ms["total_rows"] = int(legacy.get("mysql_rows_extracted",
-                                          ms["total_rows"]) or 0)
-        ms["s3_files_created"] = int(legacy.get("s3_file_count",
-                                                ms["s3_files_created"]) or 0)
-        ms["last_updated"] = legacy.get("last_mysql_extraction_time",
-                                        ms["last_updated"])
-        rs = doc["redshift_state"]
-        rs["status"] = legacy.get("redshift_status", rs["status"])
-        rs["total_rows"] = int(legacy.get("redshift_rows_loaded",
-                                          rs["total_rows"]) or 0)
-        files = set(doc.get("processed_files") or []) \
-            | set(legacy.get("processed_s3_files") or [])
-        doc["processed_files"] = sorted(files)
-        if legacy.get("backup_strategy"):
-            doc["cdc_strategy"] = legacy["backup_strategy"]
-        if legacy.get("last_error"):
-            ms["error"] = legacy["last_error"]
-        doc["metadata"]["migrated_from"] = "v1"
-        self.store._blacklist_cache[
-            self.store._key(self.source, table, self.target)] = \
-            set(doc["processed_files"])
-        self.store._save(self.source, table, self.target, doc)
-        return doc

@@ -64,7 +64,6 @@ def test_sync_watermark_clean_roundtrip(capsys, pipeline_yml, tmp_path, sf_dir):
     assert summ["mysql_total_rows"] == out["orders"]["rows_extracted"]
     assert summ["mysql_status"] == "success"
     assert summ["total_processed_files"] == out["orders"]["files_loaded"]
-    assert not summ["file_stats"]["performance_warning"]
 
     # second sync: idempotent no-op
     rc, out2 = _run(capsys, ["sync", "-p", pipeline_yml,

@@ -92,7 +92,7 @@ def test_crash_after_target_write_no_double_load(spark, orders, tc, tmp_path):
 
     doc = crashing.get("src", "orders", "tgt")
     assert doc["mysql_state"]["total_rows"] == orders.count()
-    assert doc["processed_files"] == []          # doc stays metadata-only
+    assert "processed_files" not in doc          # doc stays metadata-only
     assert spark.read.parquet(kwargs["target_path"]).count() == orders.count()
 
     # resume: delta empty; the parquet manifest already records the files

@@ -290,3 +290,15 @@ def test_curate_shards_to_file_uri(spark, documents, tmp_path):
     assert written.count() == res.counts["packed"]
     assert res.counts["shards"] == \
         written.select("bucket").distinct().count() > 0
+
+
+def test_curate_with_renamed_id_column(spark, documents):
+    """``id_col`` names the caller's id column at every stage: the
+    near-dup components (always keyed ``doc_id``) are mapped back to it,
+    so a renamed id gives the same funnel as the default call."""
+    renamed = documents.withColumnRenamed("doc_id", "id")
+    got = curate_corpus(spark, renamed, id_col="id", min_quality=0.0,
+                        pack_buckets=4)
+    want = curate_corpus(spark, documents, min_quality=0.0, pack_buckets=4)
+    assert got.counts == want.counts
+    assert got.counts["exact_dedup"] > got.counts["near_dedup"]

@@ -50,6 +50,40 @@ def test_exclusion_is_anti_join_not_collected_filter(spark, tmp_path):
     assert out.count() == 50
 
 
+def test_exclusion_ignores_duplicate_manifest_rows(spark, tmp_path):
+    """A manifest holding the same path several times (written directly,
+    not through ``record``) excludes exactly what a deduplicated one does,
+    and the anti-join reads the manifest scan as is: no Aggregate (the
+    plan form of a distinct) sits over it."""
+    mpath = str(tmp_path / "m")
+    dup = [f"/f/{i}" for i in range(0, 10, 2)] * 3 + ["/f/4"]
+    spark.createDataFrame([(p,) for p in dup], "path string") \
+        .withColumn("loaded_at", F.current_timestamp()) \
+        .write.parquet(mpath)
+    m = ParquetManifest(spark, mpath)
+    assert m.count() == len(dup)
+    out = m.exclude_loaded(files_df(spark, [f"/f/{i}" for i in range(10)]))
+    assert sorted(r.path for r in out.collect()) == \
+        [f"/f/{i}" for i in range(1, 10, 2)]
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LeftAnti" in plan
+    assert "Aggregate" not in plan
+
+
+def test_manifest_location_and_local_read(spark, tmp_path):
+    """The manifest sits under ``<staging>/_manifest``; the Spark-free
+    reader sees what ``record`` wrote and reads a missing manifest as an
+    empty record."""
+    from s3_redshift_backup_tool_spark.operators.manifest import (
+        local_loaded_paths, manifest_path)
+    staging = str(tmp_path / "stage")
+    assert manifest_path(staging) == os.path.join(staging, "_manifest")
+    assert local_loaded_paths(staging) == set()
+    ParquetManifest(spark, manifest_path(staging)).record(
+        files_df(spark, ["/f/1", "/f/2"]))
+    assert local_loaded_paths(staging) == {"/f/1", "/f/2"}
+
+
 def test_sync_with_50k_manifest_entries_keeps_doc_o1(spark, orders, tc,
                                                      tmp_path):
     """50K pre-existing manifest entries: the sync must still load exactly
@@ -74,13 +108,13 @@ def test_sync_with_50k_manifest_entries_keeps_doc_o1(spark, orders, tc,
     # the doc carries counts only — no per-file array, O(1) size at any
     # manifest cardinality
     doc = store.get("src", "orders", "tgt")
-    assert doc["processed_files"] == []
+    assert "processed_files" not in doc
     assert doc["redshift_state"]["files_loaded_total"] == r.files_loaded
     doc_path = glob.glob(str(tmp_path / "state" / "watermarks" / "v2" /
                              "*.json"))[0]
     assert os.path.getsize(doc_path) < 4096
     with open(doc_path) as f:
-        assert len(json.load(f)["processed_files"]) == 0
+        assert "processed_files" not in json.load(f)
 
     # manifest gained exactly the session's files
     assert manifest.count() == 50_000 + r.files_loaded

@@ -151,16 +151,3 @@ def test_lazy_bloom_mask_equals_driver_mask(spark):
                              m_bits=256).collect()[0][0]
     assert list(empty) == [0] * 4
 
-
-def test_salt_count_sizes_from_measured_skew():
-    """r14: the salt fan-out derives from skew_report's max_key_rows
-    and a per-task row target — not a constant (guide §2.3)."""
-    from s3_redshift_backup_tool_spark.operators.skew import salt_count_for
-
-    assert salt_count_for(1_000, 10_000) == 1          # no skew: no salt
-    assert salt_count_for(100_000, 10_000) == 10       # split hot key
-    assert salt_count_for(10**10, 10_000) == 256       # clamped
-    assert salt_count_for(10_001, 10_000) == 2         # ceil, not floor
-    import pytest as _pt
-    with _pt.raises(ValueError):
-        salt_count_for(0, 10_000)

@@ -2,13 +2,21 @@
 
 Scenarios mirror the reference's watermark test suite (SURVEY §5:
 tests/unit/test_simple_watermark_manager.py — default creation, cumulative
-sums, blacklist dedup, session totals, reset preserve_files, locks)."""
+sums, session totals, reset preserve_files, locks). The reference's
+blacklist lives in the parquet manifest here, so its dedup is pinned in
+test_manifest_store.py."""
 
+import glob
+import json
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
+from s3_redshift_backup_tool_spark.cli import main
 from s3_redshift_backup_tool_spark.state import (
-    LocalJsonBackend, LockHeldError, WatermarkStore, WatermarkView,
-    default_watermark)
+    LocalJsonBackend, LockHeldError, WatermarkStore)
 
 SRC, TBL, TGT = "us_dw:settlement.orders", "orders", "redshift_default"
 
@@ -23,7 +31,9 @@ def test_default_creation(store):
     assert doc["version"] == "2.0"
     assert doc["mysql_state"]["status"] == "pending"
     assert doc["mysql_state"]["total_rows"] == 0
-    assert doc["processed_files"] == []
+    # the loaded-file record is the parquet manifest, never the doc
+    assert "processed_files" not in doc
+    assert "last_loaded_files" not in doc["redshift_state"]
     # persisted on first get
     assert store.backend.get(store._key(SRC, TBL, TGT)) is not None
 
@@ -42,19 +52,10 @@ def test_cumulative_extraction_totals(store):
     assert ms["last_id"] == 250
 
 
-def test_blacklist_union_dedup(store):
-    store.update_load_state(SRC, TBL, TGT, loaded_files=["s3://a", "s3://b"])
-    store.update_load_state(SRC, TBL, TGT, loaded_files=["s3://b", "s3://c"])
-    doc = store.get(SRC, TBL, TGT)
-    assert sorted(doc["processed_files"]) == ["s3://a", "s3://b", "s3://c"]
-    assert store.is_processed(SRC, TBL, TGT, "s3://b")
-    assert not store.is_processed(SRC, TBL, TGT, "s3://zzz")
-
-
 def test_target_count_external_only(store):
     # load-state update must NOT move target row counts (reference
     # update_redshift_count_from_external :251-277 is the only path)
-    store.update_load_state(SRC, TBL, TGT, loaded_files=["s3://a"])
+    store.update_load_state(SRC, TBL, TGT, n_files=1)
     assert store.get(SRC, TBL, TGT)["redshift_state"]["total_rows"] == 0
     store.update_target_count(SRC, TBL, TGT, 1234)
     doc = store.get(SRC, TBL, TGT)
@@ -65,26 +66,40 @@ def test_target_count_external_only(store):
     assert doc["redshift_state"]["last_session_rows"] == 266
 
 
-def test_manual_override_and_reset_preserve_files(store):
-    store.update_load_state(SRC, TBL, TGT, loaded_files=["s3://a"])
-    store.set_manual(SRC, TBL, TGT, last_timestamp="2026-01-01 00:00:00", last_id=42)
-    doc = store.get(SRC, TBL, TGT)
+def test_manual_override_and_reset_preserve_files(tmp_path, capsys):
+    """The doc reset always starts fresh; ``--preserve-files`` decides
+    whether the table's parquet manifest (the loaded-file record) survives.
+    No Spark session: the manifest is written and checked with pyarrow."""
+    work = str(tmp_path / "work")
+    store = WatermarkStore(LocalJsonBackend(os.path.join(work, "state")))
+    store.update_extraction_state("src", "orders", "tgt", last_id=7,
+                                  session_rows=10, session_files=1)
+    store.update_load_state("src", "orders", "tgt", n_files=1)
+    store.set_manual("src", "orders", "tgt",
+                     last_timestamp="2026-01-01 00:00:00", last_id=42)
+    doc = store.get("src", "orders", "tgt")
     assert doc["metadata"]["manual_override"] is True
     assert doc["mysql_state"]["last_id"] == 42
 
-    doc = store.reset(SRC, TBL, TGT, preserve_files=True)
+    mdir = os.path.join(work, "staging", "orders", "_manifest")
+    os.makedirs(mdir)
+    pq.write_table(pa.table({"path": ["/stage/a.parquet"]}),
+                   os.path.join(mdir, "part-0.parquet"))
+
+    def reset(*flags):
+        assert main(["watermark", "reset", "-t", "orders", "--work-dir", work,
+                     *flags]) == 0
+        return json.loads(capsys.readouterr().out)
+
+    doc = reset("--preserve-files")
     assert doc["mysql_state"]["last_id"] is None
-    assert doc["processed_files"] == ["s3://a"]   # survived reset
+    assert doc["mysql_state"]["total_rows"] == 0
+    assert doc["redshift_state"].get("files_loaded_total", 0) == 0
+    assert glob.glob(os.path.join(mdir, "*.parquet"))   # survived reset
 
-    doc = store.reset(SRC, TBL, TGT, preserve_files=False)
-    assert doc["processed_files"] == []
-
-
-def test_large_blacklist(store):
-    files = [f"s3://bucket/f{i:05d}.parquet" for i in range(2000)]
-    store.update_load_state(SRC, TBL, TGT, loaded_files=files)
-    assert len(store.processed_files(SRC, TBL, TGT)) == 2000
-    assert store.is_processed(SRC, TBL, TGT, "s3://bucket/f01999.parquet")
+    doc = reset()
+    assert doc["mysql_state"]["last_id"] is None
+    assert not os.path.exists(mdir)                     # cleared
 
 
 def test_lock_exclusion(store):
@@ -127,9 +142,12 @@ def test_lock_acquire_is_atomic(store):
 
 
 def test_summary_and_file_stats(store):
+    """The summary carries the ops file stats: the count of loaded files
+    is the cumulative files_loaded_total counter (the paths themselves
+    are in the parquet manifest)."""
     store.update_extraction_state(SRC, TBL, TGT, last_timestamp="2024-01-01 00:00:00",
                                   last_id=42, session_rows=100, session_files=3)
-    store.update_load_state(SRC, TBL, TGT, loaded_files=["/f/a", "/f/b"])
+    store.update_load_state(SRC, TBL, TGT, n_files=2)
     store.update_target_count(SRC, TBL, TGT, 100)
 
     s = store.get_summary(SRC, TBL, TGT)
@@ -138,98 +156,13 @@ def test_summary_and_file_stats(store):
     assert s["total_processed_files"] == 2
     assert s["mysql_status"] == "success"
 
-    fs = store.get_file_stats(SRC, TBL, TGT)
-    assert fs["total_files"] == 2 and not fs["performance_warning"]
-    assert fs["sample_files"] == ["/f/a", "/f/b"]
-
-    split = store.get_files_by_status(SRC, TBL, TGT, ["/f/a", "/f/new"])
-    assert split["processed_files"] == ["/f/a"]
-    assert split["unprocessed_files"] == ["/f/new"]
-    assert split["total_files"] == 2
-
 
 def test_summary_manifest_mode_counts(store):
-    """In manifest-table mode the doc array stays empty; summary falls
-    back to the cumulative files_loaded_total metadata."""
+    """The doc carries no path array; summary counts files from the
+    cumulative files_loaded_total metadata."""
     store.update_load_state(SRC, "m_tbl", TGT, n_files=7)
     store.update_load_state(SRC, "m_tbl", TGT, n_files=5)
     s = store.get_summary(SRC, "m_tbl", TGT)
     assert s["total_processed_files"] == 12
-    assert store.get(SRC, "m_tbl", TGT)["processed_files"] == []
+    assert "processed_files" not in store.get(SRC, "m_tbl", TGT)
 
-
-def test_legacy_adapter_view():
-    v = WatermarkView(default_watermark())
-    assert v.last_processed_id == 0
-    assert v.mysql_status == "pending"
-    assert v.processed_s3_files == []
-
-
-def test_legacy_adapter_roundtrip(tmp_path):
-    """v1-API calls land in the v2.0 doc with cumulative accounting."""
-    from s3_redshift_backup_tool_spark.state import (
-        LegacyWatermarkAdapter, LocalJsonBackend, WatermarkStore)
-
-    store = WatermarkStore(LocalJsonBackend(str(tmp_path)))
-    ad = LegacyWatermarkAdapter(store, "src", "tgt")
-
-    assert ad.update_mysql_watermark(
-        "t1", extraction_time="2024-01-01T00:00:00Z",
-        max_data_timestamp="2024-01-01 00:00:00", last_processed_id=500,
-        rows_extracted=1000, s3_file_count=4)
-    assert ad.update_mysql_watermark(
-        "t1", extraction_time="2024-01-02T00:00:00Z",
-        max_data_timestamp="2024-01-02 00:00:00", last_processed_id=900,
-        rows_extracted=250, s3_file_count=1)
-    assert ad.update_redshift_watermark(
-        "t1", load_time=None, rows_loaded=999999,  # ignored by design
-        processed_files=["a.parquet", "b.parquet"])
-
-    wm = ad.get_table_watermark("t1")
-    assert wm.last_mysql_data_timestamp == "2024-01-02 00:00:00"
-    assert wm.last_processed_id == 900
-    assert wm.mysql_row_count == 1250          # cumulative
-    assert wm.mysql_last_session_rows == 250   # session only
-    assert wm.s3_file_count == 5
-    assert wm.redshift_row_count == 0          # rows_loaded ignored
-    assert set(wm.processed_s3_files) == {"a.parquet", "b.parquet"}
-    assert wm.mysql_status == "success" and wm.redshift_status == "success"
-
-
-def test_legacy_doc_import_migrates_v1_state(tmp_path):
-    """A v1-shaped document migrates into the v2.0 store: totals carried
-    verbatim, blacklist union-deduped, strategy preserved."""
-    from s3_redshift_backup_tool_spark.state import (
-        LegacyWatermarkAdapter, LocalJsonBackend, WatermarkStore)
-
-    store = WatermarkStore(LocalJsonBackend(str(tmp_path)))
-    ad = LegacyWatermarkAdapter(store, "src", "tgt")
-    # pre-existing v2 state with one processed file
-    store.update_load_state("src", "t2", "tgt", loaded_files=["old.parquet"])
-
-    v1 = {
-        "table_name": "t2",
-        "last_mysql_data_timestamp": "2023-06-01 12:00:00",
-        "last_processed_id": 42424242,
-        "mysql_status": "success",
-        "mysql_rows_extracted": 7_000_000,
-        "s3_file_count": 70,
-        "redshift_status": "success",
-        "redshift_rows_loaded": 6_999_000,
-        "processed_s3_files": ["old.parquet", "new1.parquet"],
-        "backup_strategy": "timestamp_only",
-    }
-    ad.import_legacy_doc("t2", v1)
-
-    wm = ad.get_table_watermark("t2")
-    assert wm.last_mysql_data_timestamp == "2023-06-01 12:00:00"
-    assert wm.last_processed_id == 42424242
-    assert wm.mysql_row_count == 7_000_000      # verbatim, not re-added
-    assert wm.redshift_row_count == 6_999_000
-    assert wm.s3_file_count == 70
-    assert wm.backup_strategy == "timestamp_only"
-    assert set(wm.processed_s3_files) == {"old.parquet", "new1.parquet"}
-    assert store.is_processed("src", "t2", "tgt", "new1.parquet")
-    # resume works off the migrated cursor
-    doc = store.get("src", "t2", "tgt")
-    assert doc["metadata"]["migrated_from"] == "v1"

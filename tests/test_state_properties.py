@@ -1,13 +1,23 @@
 """Property-based tests (hypothesis) for the watermark state math —
 the reference's subtlest logic (SURVEY §7.2): cumulative vs session
-accounting, blacklist union-dedup, reset semantics. Pure Python, no
-Spark session needed."""
+accounting, reset semantics and manual overrides. No Spark session
+needed. The reference's blacklist is the parquet manifest here; its
+union-dedup is pinned in test_manifest_store.py."""
 
 from __future__ import annotations
 
+import contextlib
+import io
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from s3_redshift_backup_tool_spark.cli import main
+from s3_redshift_backup_tool_spark.operators.manifest import (
+    local_loaded_paths, manifest_path)
 from s3_redshift_backup_tool_spark.state import (
     LocalJsonBackend, WatermarkStore)
 
@@ -38,38 +48,38 @@ file_batches = st.lists(
     min_size=1, max_size=10)
 
 
-@settings(max_examples=30, deadline=None)
-@given(batches=file_batches)
-def test_blacklist_union_never_duplicates(tmp_path_factory, batches):
-    store = _store(tmp_path_factory.mktemp("st"))
-    expected: set[str] = set()
-    for batch in batches:
-        store.update_load_state("s", "t", "g", loaded_files=batch,
-                                status="success")
-        expected |= set(batch)
-        files = store.get("s", "t", "g")["processed_files"]
-        assert len(files) == len(set(files)), "blacklist grew duplicates"
-        assert set(files) == expected
-        for f in batch:
-            assert store.is_processed("s", "t", "g", f)
-
-
 @settings(max_examples=20, deadline=None)
 @given(batches=file_batches, preserve=st.booleans())
 def test_reset_preserve_files_keeps_exactly_blacklist(tmp_path_factory,
                                                       batches, preserve):
-    store = _store(tmp_path_factory.mktemp("st"))
+    """``watermark reset`` always starts the doc fresh; the table's
+    loaded-file manifest survives exactly with ``--preserve-files`` and
+    is gone without it. The manifest is written as record() appends it:
+    one parquet file per load."""
+    work = str(tmp_path_factory.mktemp("st"))
+    store = _store(os.path.join(work, "state"))
+    mpath = manifest_path(os.path.join(work, "staging", "t"))
+    os.makedirs(mpath)
     all_files: set[str] = set()
-    for batch in batches:
-        store.update_load_state("s", "t", "g", loaded_files=batch,
-                                status="success")
-        all_files |= set(batch)
+    for i, batch in enumerate(batches):
+        new = sorted(set(batch) - all_files)
+        pq.write_table(pa.table({"path": pa.array(new, pa.string())}),
+                       os.path.join(mpath, f"part-{i:05d}.parquet"))
+        all_files |= set(new)
+        store.update_load_state("s", "t", "g", n_files=len(new))
     store.update_extraction_state("s", "t", "g", session_rows=5,
                                   session_files=1, status="success")
-    doc = store.reset("s", "t", "g", preserve_files=preserve)
+    argv = ["watermark", "reset", "-t", "t", "--source", "s", "--target", "g",
+            "--work-dir", work] + (["--preserve-files"] if preserve else [])
+    with contextlib.redirect_stdout(io.StringIO()):
+        assert main(argv) == 0
+    doc = store.get("s", "t", "g")
     assert doc["mysql_state"]["total_rows"] == 0
     assert doc["mysql_state"]["status"] == "pending"
-    assert set(doc["processed_files"]) == (all_files if preserve else set())
+    assert doc["redshift_state"].get("files_loaded_total", 0) == 0
+    assert "processed_files" not in doc
+    assert local_loaded_paths(os.path.dirname(mpath)) == \
+        (all_files if preserve else set())
 
 
 @settings(max_examples=30, deadline=None)

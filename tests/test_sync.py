@@ -335,3 +335,44 @@ def test_non_date_partition_columns_load_like_a_rooted_read(spark, orders,
     assert got.schema == rooted.schema
     assert "o_orderstatus" in got.columns
     assert got.exceptAll(rooted).isEmpty() and rooted.exceptAll(got).isEmpty()
+
+
+def test_doc_from_older_code_still_syncs(spark, orders, store, tmp_path,
+                                         capsys):
+    """A watermark doc written before the JSON blacklist was retired
+    carries a non-empty ``processed_files`` array and
+    ``last_loaded_files``. It still loads, summarises and syncs: the load
+    reads only the parquet manifest, and file counts come from
+    ``files_loaded_total``."""
+    import json
+
+    from s3_redshift_backup_tool_spark.cli import main
+    from s3_redshift_backup_tool_spark.plans import sync as sync_mod
+
+    staging = str(tmp_path / "staging" / "orders")
+    target = str(tmp_path / "target" / "orders")
+    cfg = _orders_cfg()
+    base = orders.filter(F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp"))
+    r1 = sync_table(spark, base, cfg, store, staging_path=staging, target_path=target)
+
+    key = store._key("src", "orders", "tgt")
+    old = store.backend.get(key)
+    staged = sync_mod._staged_files(spark, staging)
+    old["processed_files"] = staged + ["/elsewhere/x.parquet"]
+    old["redshift_state"]["last_loaded_files"] = staged[:1]
+    store.backend.put(key, old)
+    loaded_total = old["redshift_state"]["files_loaded_total"]
+    assert loaded_total == r1.files_loaded != len(old["processed_files"])
+
+    assert store.get_summary("src", "orders", "tgt")["total_processed_files"] \
+        == loaded_total
+    assert main(["watermark", "count", "-t", "orders",
+                 "--work-dir", str(tmp_path)]) == 0
+    assert json.loads(capsys.readouterr().out)["processed_files"] == loaded_total
+
+    r2 = sync_table(spark, orders, cfg, store, staging_path=staging, target_path=target)
+    assert r2.rows_extracted == orders.count() - r1.rows_extracted > 0
+    assert r2.files_loaded == r2.files_staged > 0 and r2.skipped_files == len(staged)
+    assert r2.target_rows == orders.count() and r2.verified
+    assert store.get_summary("src", "orders", "tgt")["total_processed_files"] \
+        == r1.files_loaded + r2.files_loaded
